@@ -6,12 +6,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      // default = core count (the contract since r1); the env override
-      // exists ONLY for the SCALE.md experiments that separate
-      // task-thread contention from partition-count overhead — the
-      // driver never sets it, so committed numbers always use the default
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       // events.parquet is TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -23,9 +18,8 @@ object Bench {
       // Executor task threads serialize behind CodeGenerator.compile's
       // KeyLock while this happens (sampled stacks). 10k entries ≈ tens
       // of MB of class metadata, scale-independent (a long-lived
-      // executor JVM wants the same), parameterized for comparability.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      // executor JVM wants the same).
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       // Generated WSCG classes embed the per-query codegen-stage ID in
       // the class NAME by default (debuggability aid), so two stages
       // with IDENTICAL generated bodies — e.g. the 5 shape-identical
@@ -36,8 +30,7 @@ object Bench {
       // r20: pagerank-family compiles 75→~20, subset −20%). Scale-
       // neutral: a long-lived production executor wants the same
       // (fewer Janino compiles + less metaspace), not a local[32] trick.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID_IN_NAME", "false"))
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional positional args = run only these queries (local profiling);
@@ -80,21 +73,11 @@ object Bench {
       // over an executor's lifetime — so trigger it here, untimed.
       try Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
       catch { case _: ClassNotFoundException => () }
-      // stored-artifact fixtures (the k-NN graph) build here, untimed:
-      // at scale they are offline-persisted indexes, and timing the
-      // one-off build inside whichever consumer runs first would
-      // mis-attribute ~3.4 s of nnDescent to a SEARCH row
-      if (selected.keys.exists(graft.queries.VectorQueries.fixtureConsumers))
-        graft.queries.VectorQueries.ensureFixtures(spark, sfDir)
-      if (selected.contains("graph_walk_skipgrams") ||
-          selected.keys.exists(graft.queries.GraphQueries.supplyFixtureConsumers))
-        graft.queries.GraphQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.WarehouseQueries.basketFixtureConsumers))
-        graft.queries.WarehouseQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.TextQueries.clusterFixtureConsumers))
-        graft.queries.TextQueries.ensureFixtures(spark, sfDir)
-      if (selected.keys.exists(graft.queries.PretrainQueries.chunkFixtureConsumers))
-        graft.queries.PretrainQueries.ensureFixtures(spark, sfDir)
+      // stored-artifact fixtures (the k-NN graph, edge tables, ...)
+      // build here, untimed: at scale they are offline-persisted
+      // indexes, and timing the one-off build inside whichever consumer
+      // runs first would mis-attribute ~3.4 s of nnDescent to a SEARCH row
+      SparkEntry.ensureFixtures(spark, sfDir)
       System.gc()
     }
     // deterministic (sorted) execution order for comparable timings

@@ -20,12 +20,10 @@ object ProfileCold {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       // match Bench: uniform WSCG class names so shape-identical stages
       // hit the compile cache (see Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID_IN_NAME", "false"))
+      .config("spark.sql.codegen.useIdInClassName", "false")
     if (noCodegen) b.config("spark.sql.codegen.wholeStage", "false")
     if (sys.env.get("SPARK_GRAFT_INTERP").contains("1")) {
       b.config("spark.sql.codegen.wholeStage", "false")

@@ -52,4 +52,15 @@ object SparkEntry {
       WarehouseQueries.oracleSql ++ MlPrepQueries.oracleSql ++
       SqlFacadeQueries.oracleSql ++ BpeQueries.oracleSql ++
       PretrainQueries.oracleSql
+
+  /** Build every stored artifact ([[graft.sources.Fixtures]]) of `dir`
+    * that does not exist yet, so that no query's first run pays for it.
+    */
+  def ensureFixtures(s: SparkSession, dir: String): Unit = {
+    VectorQueries.ensureFixtures(s, dir)
+    GraphQueries.ensureFixtures(s, dir)
+    WarehouseQueries.ensureFixtures(s, dir)
+    TextQueries.ensureFixtures(s, dir)
+    PretrainQueries.ensureFixtures(s, dir)
+  }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 import graft.operators.{BloomPrune, CdcChunking, SpanCorrupt}
 
 /** Pretraining-data-prep queries: content-defined chunking dedup, T5
@@ -48,8 +48,7 @@ object PretrainQueries {
     */
   private[graft] def storedCdcChunks(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
-      s"cdc_chunks_w4d8_v1_${Tables.contentStamp(dir, "documents")}") {
+    Fixtures.stored(s, dir, "documents", "cdc_chunks_w4d8_v1") {
       CdcChunking.chunks(Tables.documents(s, dir), "text", "doc_id",
         w = 4, divisor = 8)
     }
@@ -64,8 +63,7 @@ object PretrainQueries {
     */
   private[graft] def storedArrivalBatches(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
-      s"cdc_arrivals_3b_v1_${Tables.contentStamp(dir, "documents")}") {
+    Fixtures.stored(s, dir, "documents", "cdc_arrivals_3b_v1") {
       val docs = Tables.documents(s, dir)
       val org.apache.spark.sql.Row(iMin: Long, iMax: Long) =
         docs.agg(min(col("doc_id")), max(col("doc_id"))).head
@@ -76,16 +74,9 @@ object PretrainQueries {
           .when(col("doc_id") < i2, lit(1)).otherwise(lit(2)))
     }
 
-  /** Queries that read the stored chunk fixture — Bench pre-builds
-    * untimed when any is selected.
-    */
-  val chunkFixtureConsumers: Set[String] = Set(
-    "dedup_cdc_chunks", "boilerplate_chunks", "strip_boilerplate",
-    "cdc_maintained", "sql_cdc_dedup_stored")
-
   private[graft] def ensureFixtures(s: SparkSession, dir: String): Unit = {
-    storedCdcChunks(s, dir).count()
-    storedArrivalBatches(s, dir).count()
+    storedCdcChunks(s, dir)
+    storedArrivalBatches(s, dir)
     ()
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 import graft.operators.Dedup
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Text-analysis + dedup queries over the `documents` table — the
   * LLM-data-pipeline extension surface (BASELINE.json north star).
@@ -41,26 +41,17 @@ object TextQueries {
     */
   private[graft] def storedStarClusters(s: SparkSession,
       dir: String): DataFrame =
-    VectorQueries.storedFixture(s,
-      s"star_clusters_sh5_j50_v1_${Tables.contentStamp(dir, "documents")}") {
+    Fixtures.stored(s, dir, "documents", "star_clusters_sh5_j50_v1") {
       val docs = Tables.documents(s, dir)
       Dedup.duplicateClustersStar(docs, "doc_id",
         Dedup.shingleJaccardPairs(docs, "text", "doc_id",
           shingleLen = 5, minJaccard = 0.5))
     }
 
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
+  private[graft] def ensureFixtures(s: SparkSession, dir: String): Unit = {
     storedStarClusters(s, dir)
     ()
   }
-
-  /** Queries that read the stored cluster fixture — Bench pre-builds
-    * untimed when any is selected, so their rows measure the CONSUMER
-    * (gate/split/mining), not a rebuild of the contraction.
-    */
-  val clusterFixtureConsumers: Set[String] = Set(
-    "split_leakage_safe", "dedup_best_rep", "contrastive_triplets",
-    "contrastive_batches")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // THE composed flagship: the document-prep pipeline a training-data

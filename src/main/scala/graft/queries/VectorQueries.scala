@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.operators.{Dedup, SimilaritySearch}
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Similarity-search / embedding queries over the `embeddings` table
   * (`vec_id long, embedding array<float>, label int`).
@@ -17,53 +17,16 @@ import graft.sources.Tables
 object VectorQueries {
 
   /** The NN-descent graph as a STORED artifact — built once per
-    * (corpus, params) into a content-keyed parquet fixture under the
-    * JVM temp dir, then READ by every consumer. At scale the k-NN
-    * graph is exactly this: an expensive offline build persisted
-    * alongside the corpus, with the search path only ever reading it
-    * (KnnGraphSpec pins stored ≡ inline). Splitting the build out of
-    * `graph_search_topk`'s timed body makes the bench row measure the
-    * SEARCH capability; the build cost stays attributed to its own
-    * row (`knn_graph`, a full in-body nnDescent). nnDescent is
-    * deterministic, so a fixture from any prior session is
-    * bit-identical to a fresh build; the version tag busts the cache
-    * if the build parameters or algorithm change, and the
-    * [[Tables.contentStamp]] component busts it when the SOURCE data
-    * is regenerated at the same path (different sf or seed).
+    * (corpus, params) through [[Fixtures.stored]], then READ by every
+    * consumer. At scale the k-NN graph is exactly this: an expensive
+    * offline build persisted alongside the corpus, with the search path
+    * only ever reading it (KnnGraphSpec pins stored ≡ inline). Splitting
+    * the build out of `graph_search_topk`'s timed body makes the bench
+    * row measure the SEARCH capability; the build cost stays attributed
+    * to its own row (`knn_graph`, a full in-body nnDescent).
     */
-  /** Write-once content-keyed parquet fixture under the JVM temp dir —
-    * the shared discipline behind every stored artifact here.
-    */
-  private[graft] def storedFixture(s: SparkSession, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures")
-    val path = new java.io.File(root, tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      // build into a process-private temp sibling and rename into place:
-      // a concurrently-started driver (Bench + Verify racing) can then
-      // never observe — or clobber — a half-written fixture directory
-      // (ADVICE r19). POSIX rename onto an existing non-empty dir fails,
-      // which is exactly the loser-detects-winner semantics needed.
-      val tmp = new java.io.File(root,
-        s".$tag.tmp.${java.lang.ProcessHandle.current().pid()}")
-      build.write.mode("overwrite").parquet(tmp.toString)
-      if (!tmp.renameTo(path)) {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          throw new java.io.IOException(
-            s"could not install fixture $path and no complete copy exists")
-        // a concurrent builder won the race — drop the losing copy
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(tmp)
-      }
-    }
-    s.read.parquet(path.toString)
-  }
-
   private[graft] def storedKnnGraph(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"knn_graph_k10i3_v1_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "knn_graph_k10i3_v1") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir), "embedding", "vec_id", k = 10, iters = 3)
     }
@@ -78,8 +41,7 @@ object VectorQueries {
     * its own timed body (r20).
     */
   private[graft] def storedKnnGraphI2(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"knn_graph_k10i2_v1_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "knn_graph_k10i2_v1") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir), "embedding", "vec_id", k = 10, iters = 2)
     }
@@ -89,8 +51,7 @@ object VectorQueries {
     * fresh 10% into. Same rationale as [[storedKnnGraphI2]].
     */
   private[graft] def storedKnnGraphOldI2(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"knn_graph_old_k10i2_v1_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "knn_graph_old_k10i2_v1") {
       graft.operators.KnnGraph.nnDescent(
         Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0),
         "embedding", "vec_id", k = 10, iters = 2)
@@ -128,8 +89,7 @@ object VectorQueries {
     * by KmeansSql's unrolled replay — not just its consumers.
     */
   private[graft] def storedIvf8Raw(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_ivf8_raw_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_ivf8_raw_v2") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         Tables.embeddings(s, dir)
           .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0),
@@ -177,8 +137,7 @@ object VectorQueries {
     * Own deterministic Lloyd → the dump is hash-gated.
     */
   private[graft] def storedIvf4Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_ivf4_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_ivf4_norm_v2") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         snappedNormalized(s, dir)
           .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0),
@@ -191,8 +150,7 @@ object VectorQueries {
     * Own deterministic Lloyd → the dump is hash-gated.
     */
   private[graft] def storedIvf8Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_ivf8_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_ivf8_norm_v2") {
       centroidsToDF(s, graft.operators.LloydKmeans.fitIvfOwn(
         snappedNormalized(s, dir)
           .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0),
@@ -205,8 +163,7 @@ object VectorQueries {
     * (LloydKmeans.fitPqOwn) → the dump is hash-gated.
     */
   private[graft] def storedPq8Raw(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_pq8_raw_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_pq8_raw_v2") {
       codebooksToDF(s, graft.operators.LloydKmeans.fitPqOwn(
         Tables.embeddings(s, dir)
           .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
@@ -218,8 +175,7 @@ object VectorQueries {
     }
 
   private[graft] def storedPq16Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_pq16_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_pq16_norm_v2") {
       val sample = snappedNormalized(s, dir)
         .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
       codebooksToDF(s, graft.operators.LloydKmeans.fitPqOwn(
@@ -236,8 +192,7 @@ object VectorQueries {
     * the dump is hash-gated.
     */
   private[graft] def storedPq64Norm(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_pq64_norm_v2_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_pq64_norm_v2") {
       val sample = snappedNormalized(s, dir)
         .where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
       codebooksToDF(s, graft.operators.LloydKmeans.fitPqOwn(
@@ -257,8 +212,7 @@ object VectorQueries {
     * hash-gated while the index stays rows-only.
     */
   private[graft] def storedAnnAuditPairs(s: SparkSession, dir: String): DataFrame =
-    storedFixture(s,
-      s"ann_audit_pairs_v3_${Tables.contentStamp(dir, "embeddings")}") {
+    Fixtures.stored(s, dir, "embeddings", "ann_audit_pairs_v3") {
       val e = normalizedEmbeddings(s, dir)
       SimilaritySearch.knnJoinIvfPq(
         e, e.where(pmod(col("vec_id"), lit(50)) === 0),
@@ -270,11 +224,12 @@ object VectorQueries {
     }
 
   /** Pre-build the stored-artifact fixtures OUTSIDE any timed body —
-    * called from Bench's untimed session warm-up so the first
-    * consumer's bench row doesn't absorb the one-off build (at scale
-    * these are offline-persisted index artifacts, not query work).
+    * reached through [[graft.SparkEntry.ensureFixtures]] from Bench's
+    * untimed session warm-up so the first consumer's bench row doesn't
+    * absorb the one-off build (at scale these are offline-persisted
+    * index artifacts, not query work).
     */
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
+  private[graft] def ensureFixtures(s: SparkSession, dir: String): Unit = {
     storedKnnGraph(s, dir)
     storedKnnGraphI2(s, dir)
     storedKnnGraphOldI2(s, dir)
@@ -287,19 +242,6 @@ object VectorQueries {
     storedAnnAuditPairs(s, dir)
     ()
   }
-
-  /** Queries that read a stored fixture — Bench pre-builds untimed
-    * when any of them is selected.
-    */
-  val fixtureConsumers: Set[String] = Set(
-    "graph_search_topk", "graph_search_ivf_seeded",
-    "knn_graph_insert_stored", "knn_graph_remove_stored",
-    "ann_quantizer_ivf8", "ann_quantizer_ivf4_norm",
-    "ann_quantizer_ivf8_norm", "ann_codebook_pq8_raw",
-    "ann_codebook_pq16_norm", "ann_codebook_pq64_norm",
-    "ann_audit_pairs", "ann_recall_audit", "ann_drift", "ann_index_rows",
-    "sim_ivf_topk", "sim_pq_topk", "knn_join_ivf", "knn_join_pq",
-    "hybrid_batch_rrf_ivf", "dedup_semantic", "decontaminate_semantic")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Multimodal decode plumbing as a gate query: binary payloads

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.car.Splits
 import graft.operators.{Association, Attribution, DataQuality, GraphAlgs, InvertedIndex, RecordLinkage, Scd, StringJoin, TimeSeries}
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Warehouse-maintenance + graph-analytics extensions: SCD2 dimension
   * history (build, incremental merge, as-of lookup), gap-filled
@@ -74,7 +74,7 @@ object WarehouseQueries {
       .select(col("__e.a").as("a"), col("__e.b").as("b"))
   }
 
-  /** [[basketEdges]] as a STORED artifact (the storedKnnGraph
+  /** [[basketEdges]] as a STORED artifact (the [[Fixtures.stored]]
     * discipline): ten graph queries consume the same basket adjacency,
     * and each was re-running the per-order aggregation + explode from
     * raw lineitem inside its timed body. At 100 TB the canonical edge
@@ -85,26 +85,11 @@ object WarehouseQueries {
     * `graph_sssp`'s co-occurrence weights depend on them), so every
     * consumer's output is bit-identical to the inline derivation.
     */
-  private[graft] def storedBasketEdges(s: SparkSession, dir: String): DataFrame = {
-    val tag = s"basket_edges_v1_${Tables.contentStamp(dir, "lineitem")}"
-    val path = new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_fixtures"), tag)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      basketEdges(s, dir).write.mode("overwrite").parquet(path.toString)
-    }
-    s.read.parquet(path.toString)
-  }
-
-  /** Queries that read the basket-edge fixture — Bench pre-builds it
-    * untimed when any of them is selected.
-    */
-  private[graft] val basketFixtureConsumers: Set[String] = Set(
-    "graph_triangles", "graph_clustering", "graph_label_prop",
-    "graph_link_prediction", "graph_ktruss", "graph_kcore", "graph_bfs",
-    "graph_sssp", "graph_components", "graph_modularity")
+  private[graft] def storedBasketEdges(s: SparkSession, dir: String): DataFrame =
+    Fixtures.stored(s, dir, "lineitem", "basket_edges_v1")(basketEdges(s, dir))
 
   /** Pre-build stored fixtures OUTSIDE any timed body (Bench warm-up). */
-  def ensureFixtures(s: SparkSession, dir: String): Unit = {
+  private[graft] def ensureFixtures(s: SparkSession, dir: String): Unit = {
     storedBasketEdges(s, dir)
     ()
   }
